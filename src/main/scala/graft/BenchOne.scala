@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time individual entries (args = names), printing as each
   * finishes — for isolating slow queries. Each entry runs
   * SPARK_GRAFT_PASSES times (default 6; pass 1 is cold) and the
@@ -24,16 +22,8 @@ object BenchOne {
     val calParPre = JvmStamp.calibratePar()
     println(f"[benchone] ambient_premain load1m=$ambient cal_pre=$calPre%.3f s cal_par_pre=$calParPre%.3f s")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors.toString)
     val passes = sys.env.getOrElse("SPARK_GRAFT_PASSES", "6").toInt
-    val spark = Engine.prepare(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate())
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Engine.session()
     def load(): String =
       try scala.io.Source.fromFile("/proc/loadavg").mkString
         .split("\\s+").take(1).mkString

@@ -7,6 +7,23 @@ import org.apache.spark.sql.functions.col
   * point (SparkEntry.queries, Verify, Bench, tests). */
 object Engine {
 
+  /** The scheduled jobs' session: `local[SPARK_GRAFT_CPUS]` (default:
+    * every available core) with as many shuffle partitions, prepared.
+    * `getOrCreate`, so a caller that already built a session (a test,
+    * a benchmark harness) gets that one. */
+  def session(): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
+    val spark = prepare(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate())
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** Idempotent runtime session config.
     *  - ANSI off: the reference ran Spark 3.x ANSI-off; its cleaning
     *    relies on junk→NULL casts (SURVEY.md quirk Q-j). Spark 4 flips

@@ -265,9 +265,11 @@ object ImageCodec {
     // is already an in-memory byte array; cache in memory.
     val iis = new javax.imageio.stream.MemoryCacheImageInputStream(
       new java.io.ByteArrayInputStream(bytes))
-    // no explicit close: ImageIO.read(ImageInputStream) closes the
-    // stream itself (a second close throws "closed")
+    // ImageIO.read(ImageInputStream) closes the stream itself after a
+    // read (a second close throws "closed"), but not when no reader
+    // claims the payload and it returns null: close it here then
     val bi = javax.imageio.ImageIO.read(iis)
+    if (bi == null) iis.close()
     require(bi != null, "no ImageIO reader claims this payload")
     val w = bi.getWidth; val h = bi.getHeight
     require(w > 0 && h > 0 && w.toLong * h <= Int.MaxValue,

@@ -288,4 +288,11 @@ class ImageCodecSpec extends AnyFunSuite {
     assert(ImageCodec.decodeOpt(badPng).isEmpty)
     assert(ImageCodec.decodeOpt(badJpg).isEmpty)
   }
+
+  test("ImageIO arm: a payload no reader claims fails with 'no ImageIO reader'") {
+    val png = ImageCodec.encodeImageIo(Image(2, 2, px), "png")
+    val bad = png.clone(); bad(1) = 'X'.toByte
+    val e = intercept[IllegalArgumentException](ImageCodec.decodeImageIo(bad))
+    assert(e.getMessage.contains("no ImageIO reader"))
+  }
 }
