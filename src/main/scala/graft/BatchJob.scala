@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.Executors
-import scala.concurrent.{Await, ExecutionContext, Future}
-import scala.concurrent.duration.Duration
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.storage.StorageLevel
 import graft.pipeline.{PinQueries, PinSql}
@@ -60,33 +57,16 @@ object BatchJob {
       "q8" -> (() => PinQueries.q8(pin, user)),
       "q9" -> (() => PinQueries.q9(pin, user)))
     val cleaned = Seq(pin, geo, user)
-    val pool = Executors.newFixedThreadPool(
-      math.min(queries.size, spark.sparkContext.defaultParallelism))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       cleaned.foreach(_.persist(StorageLevel.MEMORY_AND_DISK))
       PinSql.registerViews(pin, geo, user)
-      val writes = queries.map { case (name, q) =>
-        name -> Future {
+      Engine.writeAll(spark, "BatchJob", queries.map { case (name, q) =>
+        name -> (() => {
           q().write.mode("overwrite").parquet(s"$outDir/$name")
           println(s"[batch] $name -> $outDir/$name")
-        }
-      }
-      // wait for all nine before failing, so no write still reads the
-      // cache when `finally` drops it
-      val failures = writes.flatMap { case (name, f) =>
-        Await.ready(f, Duration.Inf).value.flatMap(_.failed.toOption).map(name -> _)
-      }
-      failures.headOption.foreach { case (name, e) =>
-        val err = new RuntimeException(
-          s"BatchJob: ${failures.size} of ${queries.size} writes failed, first $name", e)
-        failures.tail.foreach(f => err.addSuppressed(f._2))
-        throw err
-      }
+        })
+      })
       println(s"[batch] done: ${queries.size} queries -> $outDir")
-    } finally {
-      pool.shutdown()
-      cleaned.foreach(_.unpersist())
-    }
+    } finally cleaned.foreach(_.unpersist())
   }
 }

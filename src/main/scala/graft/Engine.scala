@@ -1,5 +1,8 @@
 package graft
 
+import java.util.concurrent.Executors
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.Duration
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
@@ -22,6 +25,32 @@ object Engine {
       .getOrCreate())
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Run the named writes of one `job` at the same time, from a driver
+    * pool of at most `defaultParallelism` threads (the session's
+    * cores), taking them in order. Waits for every write, then throws
+    * "<job>: k of n writes failed, first <name>" (the others
+    * suppressed) if any failed — waiting first, so no write still
+    * reads an input the caller releases after. The pool is shut down
+    * on every path. */
+  def writeAll(spark: SparkSession, job: String,
+      writes: Seq[(String, () => Unit)]): Unit = {
+    val pool = Executors.newFixedThreadPool(
+      math.min(writes.size, spark.sparkContext.defaultParallelism))
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val running = writes.map { case (name, w) => name -> Future(w()) }
+      val failures = running.flatMap { case (name, f) =>
+        Await.ready(f, Duration.Inf).value.flatMap(_.failed.toOption).map(name -> _)
+      }
+      failures.headOption.foreach { case (name, e) =>
+        val err = new RuntimeException(
+          s"$job: ${failures.size} of ${writes.size} writes failed, first $name", e)
+        failures.tail.foreach(f => err.addSuppressed(f._2))
+        throw err
+      }
+    } finally pool.shutdown()
   }
 
   /** Idempotent runtime session config.

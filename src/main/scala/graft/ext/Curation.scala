@@ -57,7 +57,14 @@ object Curation {
     * (much smaller) embedding table; every filter and score is
     * otherwise fused into scan-side projections, and the loser/keeper
     * join sides are dup slivers — broadcast lookups, never corpus-wide
-    * shuffles. */
+    * shuffles.
+    *
+    * Building the plan runs three eager pin builds (`Pin.eager`): the
+    * LM token counts, the MinHash signatures under the split's
+    * cluster graph, and the semantic-dedup cell assignment. They
+    * share no input plan, so they are built concurrently — their
+    * fixed per-stage scheduling floors overlap instead of adding up.
+    * The plan and its output do not depend on the order they finish. */
   def pretrainingCorpus(docs: DataFrame, emb: DataFrame,
       minQuality: Double = 0.5, minMeanLogProb: Double = -4.0,
       maxRepetition: Double = 0.5): DataFrame = {
@@ -72,13 +79,13 @@ object Curation {
         TextAnalysis.withQuality(TextAnalysis.langId(docs)))
       .select(col("doc_id"), col("lang_pred"), col("quality"),
         col("repetition"))
-    val lm = TextAnalysis.lmQuality(docs).select(col("doc_id"), col("mean_logprob"))
     val keepers = Dedup.exact(docs).select(col("keep_id").as("doc_id"))
-    // The two candidate-pair graphs (shingle Jaccard over text, cosine
-    // over embeddings) are independent and both end in an eager
-    // connected-components materialization (Dedup.dupClusters); build
-    // them concurrently so their fixed per-stage scheduling floors
-    // overlap instead of serializing. Spark actions are thread-safe.
+    // The LM counts and the two candidate-pair graphs (shingle Jaccard
+    // over text, cosine over embeddings) each end in an eager build;
+    // run the three concurrently (see above). Spark actions are
+    // thread-safe.
+    val lmF = Future(TextAnalysis.lmQuality(docs)
+      .select(col("doc_id"), col("mean_logprob")))
     val semF = Future(Similarity.semanticDupLosers(emb)
       .select(col("vec_id").as("doc_id")))
     // Round 7: the split rides the CLUSTER table (dup sliver — a
@@ -94,6 +101,7 @@ object Curation {
         .select(col("doc_id"), col("cluster_id")))
     val semLosers = Await.result(semF, Duration.Inf)
     val clusters = Await.result(clustersF, Duration.Inf)
+    val lm = Await.result(lmF, Duration.Inf)
     val joined = perRow
       .join(lm, "doc_id")
       .join(clusters, Seq("doc_id"), "left")

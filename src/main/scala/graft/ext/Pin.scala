@@ -1,6 +1,7 @@
 package graft.ext
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{count, lit}
 
 /** Eager, plan-keyed pinning of a shared intermediate (r18).
   *
@@ -11,28 +12,31 @@ import org.apache.spark.sql.DataFrame
   * stages are submitted concurrently, race the cold cache before any
   * partition lands, and each recomputes the upstream pipeline.
   *
-  * `Pin.eager` persists and immediately materializes, so every
+  * `Pin.eager` materializes the frame before it returns, so every
   * consumer — including concurrently-submitted AQE stages — reads the
-  * one materialized copy. The persist stays plan-keyed in the
-  * CacheManager: a later invocation that builds the canonically-equal
-  * frame (same fixture, same operator) substitutes the
-  * already-materialized relation instead of recomputing.
+  * one materialized copy. The build is ONE Spark action: an eager
+  * `localCheckpoint` of the frame with an observed row count riding
+  * along (`Dataset.observe`), then a `coalesce` of the checkpoint to
+  * a partition count derived from that row count. Nothing is persisted through
+  * the CacheManager, so a build leaves no cache entry behind, on
+  * success or failure. A session-scoped registry keyed by the
+  * canonical plan hands a later invocation that builds the
+  * canonically-equal frame (same fixture, same operator) the
+  * already-built checkpoint instead of recomputing.
   *
-  * On top of the persist, the returned frame is `sized`: lineage
-  * truncated (localCheckpoint) and partitions derived from the
-  * materialized row count. Profiling this round (jstack sampling of
-  * the executor pool) attributed the dominant CPU of every post-pin
-  * stage to `ObjectInputStream.readObject` — task-binary
-  * deserialization: a persisted frame keeps its FULL upstream plan in
-  * the serialized RDD graph, so each downstream task paid ~0.2 s just
-  * deserializing the pipeline it never runs, multiplied by every task
-  * of every consumer stage (32-128 tasks each on KB-sized proxies).
-  * The checkpoint cut + row-derived partition count removed ~75% of
-  * the pageRank loop's CPU in the isolated A/B. Partition sizing is
-  * scale-adaptive (rows / rowsPerPart), never a core-count constant:
-  * at 100 TB a billion-row proxy still fans out to hundreds of
-  * partitions, while a KB-sized one stops paying 32 tasks of fixed
-  * deserialization cost per consumer stage.
+  * Why checkpoint and size: profiling (jstack sampling of the
+  * executor pool) attributed the dominant CPU of every post-pin stage
+  * to `ObjectInputStream.readObject` — task-binary deserialization: a
+  * persisted frame keeps its FULL upstream plan in the serialized RDD
+  * graph, so each downstream task paid ~0.2 s just deserializing the
+  * pipeline it never runs, multiplied by every task of every consumer
+  * stage (32-128 tasks each on KB-sized proxies). The checkpoint cut
+  * + row-derived partition count removed ~75% of the pageRank loop's
+  * CPU in the isolated A/B. Partition sizing is scale-adaptive
+  * (rows / rowsPerPart), never a core-count constant: at 100 TB a
+  * billion-row proxy still fans out to hundreds of partitions, while
+  * a KB-sized one stops paying 32 tasks of fixed deserialization cost
+  * per consumer stage.
   *
   * Use ONLY on lightweight proxies (counts-collapsed tables,
   * signatures, thumbnails, assignments — guide §8 "decide with small
@@ -49,22 +53,18 @@ import org.apache.spark.sql.DataFrame
   * pin is a cheap-to-rebuild proxy inside one job; a deployment that
   * needs mid-job executor-loss recovery should swap `localCheckpoint`
   * for a reliable `checkpoint` (requires `setCheckpointDir` on
-  * durable storage — one-line change in `sized`), paying a
-  * write-to-storage per pin build. */
+  * durable storage), paying a write-to-storage per pin build. */
 object Pin {
   /** Narrow proxy rows per checkpoint partition: ~2M rows of a few
     * longs ≈ tens of MB — the same band AQE's 64 MB advisory targets. */
   private val RowsPerPart = 2L * 1000 * 1000
 
   /** Session-scoped registry of built pins, keyed by the canonicalized
-    * analyzed plan AND the output field names — the same plan-keyed
-    * reuse the CacheManager gave the persist-only pins (a later
-    * invocation building the canonically-equal frame gets the
-    * materialized proxy instead of recomputing), now serving the sized
-    * CHECKPOINT so the reuse and the lineage truncation compose.
-    * Without it, every invocation re-ran the count+coalesce+checkpoint
-    * build (two jobs per pin), a measured +0.3–0.5 s on pin-dense
-    * cheap entries (cluster_top_terms 0.63 → 1.07 s).
+    * analyzed plan AND the output field names: a later invocation
+    * building the canonically-equal frame gets the materialized proxy
+    * instead of recomputing. Without it, every invocation re-ran the
+    * build, a measured +0.3–0.5 s on pin-dense cheap entries
+    * (cluster_top_terms 0.63 → 1.07 s).
     *
     * The field names are part of the key because canonicalization
     * normalizes attribute NAMES away: two pins that differ only in
@@ -75,6 +75,12 @@ object Pin {
     * tfidf_top_terms). Same canonical plan + same names ⇒ same frame,
     * so the composite key is sound.
     *
+    * The values are `Slot`s, not frames: `getOrElseUpdate` may run its
+    * argument on several racing threads, but it returns the one slot
+    * that won the insert to all of them, and only that slot's `frame`
+    * is ever forced — so each key is built once, and a racing first
+    * use waits for that build instead of running its own.
+    *
     * Bounded (MaxEntries): pins are small proxies, but a long-lived
     * session (a 100 TB campaign driving thousands of operator
     * invocations over changing inputs) must not accumulate checkpoint
@@ -82,14 +88,16 @@ object Pin {
     * the dropped frames' checkpoint RDDs are released to the
     * ContextCleaner (correctness is unaffected; the next use rebuilds).
     * Entries die with the session; memory is one sized proxy per
-    * distinct pin plan — the same footprint the CacheManager previously
-    * held, which the build now releases (unpersist after the
-    * checkpoint materializes). */
+    * distinct pin plan. */
   private val MaxEntries = 512
   private val reg = scala.collection.concurrent.TrieMap
     .empty[(org.apache.spark.sql.SparkSession,
       org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
-      Seq[String]), DataFrame]
+      Seq[String]), Slot]
+
+  private final class Slot(df: DataFrame) {
+    lazy val frame: DataFrame = build(df)
+  }
 
   /** Plan-shape test support: run `f` with `eager` as the identity, so
     * a PlanSpec assertion sees the FULL logical tree — including the
@@ -121,21 +129,37 @@ object Pin {
       df.schema.fieldNames.toSeq)
     reg.getOrElseUpdate(key, {
       if (reg.size >= MaxEntries) reset()
-      df.persist()
-      val out = sized(df, df.count())
-      df.unpersist()
-      out
-    })
+      new Slot(df)
+    }).frame
+  }
+
+  /** The one-job build: the checkpoint and the row count come from the
+    * same action, the partition count from the observed rows. The
+    * count is read from the action's own query execution, on this
+    * thread, once the action has returned — not through an
+    * `Observation`, whose session-wide listener waits on the async
+    * listener bus and forces the executed plan of every later query
+    * of the session, logging an error stack for each one that fails. */
+  private def build(df: DataFrame): DataFrame = {
+    val counted = df.observe("__pin_rows", count(lit(1)))
+    val cut = counted.localCheckpoint()
+    val n = counted.queryExecution.observedMetrics("__pin_rows").getLong(0)
+    val cur = math.max(cut.rdd.getNumPartitions, 1)
+    val p = parts(n, cur)
+    if (p < cur) cut.coalesce(p) else cut
   }
 
   /** Truncate lineage and right-size partitions of an
     * already-materialized proxy: downstream task binaries then carry a
     * checkpoint-scan stub instead of the full upstream plan. */
-  def sized(df: DataFrame, rows: Long,
-      rowsPerPart: Long = RowsPerPart): DataFrame = {
+  def sized(df: DataFrame, rows: Long): DataFrame = {
     val cur = math.max(df.rdd.getNumPartitions, 1)
-    val parts = math.max(1L,
-      math.min(cur.toLong, (rows + rowsPerPart - 1) / rowsPerPart)).toInt
-    (if (parts < cur) df.coalesce(parts) else df).localCheckpoint()
+    val p = parts(rows, cur)
+    (if (p < cur) df.coalesce(p) else df).localCheckpoint()
   }
+
+  /** Partitions for `rows` rows of a frame that has `cur`: one per
+    * `RowsPerPart` rows, at least one, at most `cur`. */
+  private[graft] def parts(rows: Long, cur: Int): Int =
+    math.max(1L, math.min(cur.toLong, (rows + RowsPerPart - 1) / RowsPerPart)).toInt
 }

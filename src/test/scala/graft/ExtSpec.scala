@@ -2834,4 +2834,75 @@ class ExtSpec extends SparkSpec {
     assert(math.abs(TextAnalysis.zipfFit(flat).head.getAs[Double]("slope"))
       < 0.1)
   }
+
+  private def cacheEmpty: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
+
+  test("Pin.eager: one build per key when four threads pin it at once") {
+    import java.util.concurrent.{ConcurrentLinkedQueue, CyclicBarrier}
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val jobs = new ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(e.stageInfos.map(_.name).mkString(";"))
+    }
+    // canonically equal, separately constructed frames; the literal
+    // keeps the key apart from every other pin in the shared session
+    def frame() = spark.range(0, 200000, 1, 4)
+      .select(col("id"), (col("id") * 31 % 7).as("k"), lit("pin-race").as("tag"))
+    val barrier = new CyclicBarrier(4)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    spark.sparkContext.addSparkListener(listener)
+    val pinned = try {
+      val fs = (1 to 4).map(_ => Future { barrier.await(); graft.ext.Pin.eager(frame()) })
+      val out = fs.map(Await.result(_, 120.seconds))
+      // the bus delivers in order: once this marker job is seen, every
+      // job the builds started has been seen too
+      spark.range(1).count()
+      val deadline = System.currentTimeMillis() + 60000
+      while (!jobs.asScala.exists(_.contains("count at ExtSpec")) &&
+        System.currentTimeMillis() < deadline) Thread.sleep(50)
+      out
+    } finally {
+      pool.shutdown()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    val builds = jobs.asScala.toSeq.filter(_.contains("Pin.scala"))
+    assert(builds.size == 1, builds)
+    assert(builds.head.startsWith("localCheckpoint at"), builds)
+    assert(pinned.forall(_ eq pinned.head))
+    assert(pinned.head.count() == 200000)
+  }
+
+  test("Pin.eager: empty input, partition count, no cache entry") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    spark.catalog.clearCache() // fixtures cached by other suites
+    // an empty frame, also one the optimizer folds to an empty
+    // relation, still observes its row count: the build returns
+    val empties = Seq(
+      spark.range(0, 100, 1, 4).where(col("id") < 0).withColumn("e", lit(1)),
+      spark.range(0, 100, 1, 4).where(lit(false)).withColumn("e", lit(2)))
+    empties.foreach { df =>
+      val pinned = Await.result(Future(graft.ext.Pin.eager(df)), 60.seconds)
+      assert(pinned.collect().isEmpty)
+      assert(pinned.rdd.getNumPartitions <= 1) // 0 when the plan folds to empty
+    }
+    // ceil(rows / 2M) partitions, capped at the input's count
+    val small = graft.ext.Pin.eager(
+      spark.range(0, 1000, 1, 4).withColumn("e", lit(3)))
+    assert(small.rdd.getNumPartitions == 1)
+    assert(small.count() == 1000)
+    assert(graft.ext.Pin.parts(0L, 4) == 1)
+    assert(graft.ext.Pin.parts(2000001L, 4) == 2)
+    assert(graft.ext.Pin.parts(5000000L, 8) == 3)
+    assert(graft.ext.Pin.parts(5000000L, 2) == 2)
+    assert(cacheEmpty)
+  }
 }
